@@ -25,10 +25,12 @@ object Bench {
     benchBody(spark, sfDir, probe)
   }
 
-  /** The bench protocol's SparkSession — ONE definition, shared with
-    * [[Prewarm]] (review r15 II: a copy-pasted config would silently
-    * diverge the audit tool's staged-build numbers from the bench's
-    * ledger lines the moment either gained a setting).
+  /** The engine's SparkSession — the ONE definition every main
+    * ([[Verify]], [[PlanDump]], [[Prewarm]], [[Demo]]) and the
+    * benchmark harness open (review r15 II: a copy-pasted config
+    * silently diverges one tool's numbers or plans from the bench's the
+    * moment either gains a setting). `SPARK_GRAFT_CPUS` (default 4) sets
+    * the local core count and the shuffle partitions.
     */
   private[graft] def openSession(): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -37,11 +39,6 @@ object Bench {
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      // Graph queries read the once-written src-bucketed standing edge
-      // layout (GraphStateStore) instead of rebuilding the edge list per
-      // query — the 100 TB deployment shape, answer-invariance proven by
-      // GraphStateSpec, build cost paid once in the warm-up.
-      .config("spark.graft.graph.bucketedEdges", "true")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -292,18 +289,20 @@ object Bench {
     * standing file exists and its env header declares MORE cores than
     * this run, divert to `BENCH_SPREAD_c<cpus>.json`; equal-or-higher
     * core reruns keep refreshing the standing name, and an explicit
-    * SPARK_GRAFT_SPREAD_OUT always wins (callers bypass this). A
-    * pre-`cpus`-stamp legacy file (no "cpus" key) is treated as
+    * SPARK_GRAFT_SPREAD_OUT always wins (callers bypass this). The
+    * diverted file sits beside the standing one. Only the `"cpus"` stamp
+    * inside the `"env":{…}` header counts; a file that is missing,
+    * unreadable, unparseable or a pre-stamp legacy board is treated as
     * overwritable — the stamp is what makes the guard enforceable.
     */
   private[graft] def spreadDefaultPath(cpus: Int, standing: String): String = {
     val p = java.nio.file.Paths.get(standing)
-    val existingCpus =
-      if (!java.nio.file.Files.exists(p)) None
-      else """"cpus":(\d+)""".r.findFirstMatchIn(
-        java.nio.file.Files.readString(p)).map(_.group(1).toInt)
+    val existingCpus = scala.util.Try(
+      """"env":\{[^{}]*"cpus":(\d+)""".r.findFirstMatchIn(
+        java.nio.file.Files.readString(p)).map(_.group(1).toInt))
+      .toOption.flatten
     if (existingCpus.exists(_ > cpus)) {
-      val diverted = s"BENCH_SPREAD_c$cpus.json"
+      val diverted = p.resolveSibling(s"BENCH_SPREAD_c$cpus.json").toString
       System.err.println(s"[bench] spread: standing $standing is a " +
         s"${existingCpus.get}-core board; this $cpus-core run writes " +
         diverted + " instead")
@@ -495,10 +494,17 @@ object Bench {
     // the pause budget the per-query numbers absorbed.
     val (gcMs0, gcN0) = graft.ops.JvmEnv.gcTotals
     val cpuNs0 = graft.ops.JvmEnv.processCpuNanos
-    val results = selected.map { case (name, fn) =>
-      def once(): Double = {
+    // A failing sample is no sample: the query is named on stderr, gets
+    // no timing (a fast throw must not read as a fast query), and the
+    // run exits non-zero once the line and the spread file are written.
+    val failed = scala.collection.mutable.ArrayBuffer.empty[String]
+    val results = selected.flatMap { case (name, fn) =>
+      def once(): Option[Double] = {
         val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
+        val ok =
+          try { fn(spark, sfDir).count(); true }
+          catch { case e: Throwable =>
+            System.err.println(s"[bench] $name failed: $e"); false }
         val dt = (System.nanoTime() - t0) / 1e9
         graft.ops.Ck.drain(spark)
         val swept = graft.ops.Ck.sweep(spark)
@@ -506,13 +512,16 @@ object Bench {
           sweptTotal += swept
           leakers(name) = leakers.getOrElse(name, 0) + swept
         }
-        dt
+        if (ok) Some(dt) else None
       }
-      if (name.startsWith("ml_") || tripled(name)) {
-        val runs = Seq(once(), once(), once()).sorted
-        spreads(name) = (runs.head, runs(1), runs.last)
-        name -> runs(1)
-      } else name -> once()
+      val samples = if (name.startsWith("ml_") || tripled(name)) 3 else 1
+      val runs = Iterator.continually(once()).take(samples)
+        .takeWhile(_.isDefined).flatten.toSeq.sorted
+      if (runs.size < samples) { failed += name; None }
+      else {
+        if (samples == 3) spreads(name) = (runs.head, runs(1), runs.last)
+        Some(name -> runs(samples / 2))
+      }
     }
     if (sweptTotal > 0)
       System.err.println(s"[bench] swept $sweptTotal un-owned persistent " +
@@ -618,5 +627,10 @@ object Bench {
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(spreadPath), spreadBody)
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"[bench] ${failed.size} queries failed: " +
+        failed.mkString(", "))
+      sys.exit(1)
+    }
   }
 }

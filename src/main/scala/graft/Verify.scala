@@ -1,31 +1,16 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare. A query that
+  * fails is named on stderr and the dump carries on; once every query
+  * has run, the main exits non-zero and lists all failed names. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      // Same flag as Bench: the driver's DuckDB hash gate then verifies
-      // the exact standing-layout path the bench measures (oracles are
-      // path-independent definitional recomputes, so this swaps the
-      // Spark plan, never the expected answer).
-      .config("spark.graft.graph.bucketedEdges", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.ops.Logs.quietBoundedWindowWarning()
+    val spark = Bench.openSession()
     // Same loud env probe as Bench (r13): a JVM missing Spark's
-    // --add-opens makes MLlib-fit queries fail per-query and silently
-    // VANISH from the dump (each is caught and skipped below) — name
-    // the cause up front instead of leaving a shrunken dump to explain
-    // itself.
+    // --add-opens makes MLlib-fit queries fail per-query (each is caught,
+    // named, and fails the run below) — name the cause up front.
     val closedOpens = graft.ops.JvmEnv.closedOpens
     if (closedOpens.nonEmpty)
       System.err.println("[verify] WARNING: JVM is missing --add-opens " +
@@ -36,17 +21,22 @@ object Verify {
     // unknown names fail loudly (SparkEntry.selectedQueries) instead of
     // silently shrinking the dump.
     val selected = SparkEntry.selectedQueries()
-    selected.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
+    val failed = selected.toSeq.flatMap { case (name, fn) =>
+      val failure =
+        try {
+          fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+            .parquet(s"$outDir/$name")
+          None
+        } catch { case e: Throwable =>
+          System.err.println(s"[verify] $name failed: ${e.getMessage}")
+          Some(name)
+        }
       // The result is fully written (or the query failed) — release this
       // query's tracked checkpoint blocks plus any third-party leftovers
       // (MLlib caches) so a 241-query dump doesn't accumulate storage.
       graft.ops.Ck.drain(spark)
       graft.ops.Ck.sweep(spark)
+      failure
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
@@ -64,5 +54,10 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"[verify] ${failed.size} queries failed: " +
+        failed.mkString(", "))
+      sys.exit(1)
+    }
   }
 }

@@ -37,23 +37,36 @@ class BenchFmtSpec extends AnyFunSuite {
 
   /** r16 verdict #4: a lower-core rerun must not overwrite a
     * higher-core BENCH_SPREAD board of record. The guard reads the
-    * standing file's stamped `"cpus"` header.
+    * standing file's stamped `"cpus"` in its env header, and diverts to
+    * a file beside the standing one.
     */
   test("spread path diverts a lower-core rerun, keeps higher/equal") {
     val dir = java.nio.file.Files.createTempDirectory("spreadguard")
     val standing = dir.resolve("BENCH_SPREAD.json").toString
+    def write(body: String): Unit =
+      java.nio.file.Files.writeString(java.nio.file.Paths.get(standing), body)
     // no standing file: keep the standing name
     assert(Bench.spreadDefaultPath(8, standing) === standing)
-    // standing 32-core board: an 8-core rerun diverts, a 32-core
-    // rerun and a 64-core rerun keep refreshing the standing name
-    java.nio.file.Files.writeString(java.nio.file.Paths.get(standing),
-      """{"registry":261,"env":{"heapGB":8.0,"opens":"ok","cpus":32,"gcSec":1.0},"spread":{}}""")
-    assert(Bench.spreadDefaultPath(8, standing) === "BENCH_SPREAD_c8.json")
+    // standing 32-core board: an 8-core rerun diverts (beside the
+    // standing file, not into the working directory), a 32-core rerun
+    // and a 64-core rerun keep refreshing the standing name
+    write("""{"registry":261,"env":{"heapGB":8.0,"opens":"ok","cpus":32,"gcSec":1.0},"spread":{}}""")
+    assert(Bench.spreadDefaultPath(8, standing) ===
+      dir.resolve("BENCH_SPREAD_c8.json").toString)
     assert(Bench.spreadDefaultPath(32, standing) === standing)
     assert(Bench.spreadDefaultPath(64, standing) === standing)
     // legacy file without a cpus stamp: overwritable (no basis to guard)
-    java.nio.file.Files.writeString(java.nio.file.Paths.get(standing),
-      """{"registry":261,"env":{"heapGB":8.0},"spread":{}}""")
+    write("""{"registry":261,"env":{"heapGB":8.0},"spread":{}}""")
+    assert(Bench.spreadDefaultPath(8, standing) === standing)
+    // a "cpus" field outside the env header is not the stamp
+    write("""{"registry":261,"env":{"heapGB":8.0},"spread":{"q_x":{"cpus":32,"min":1.0}}}""")
+    assert(Bench.spreadDefaultPath(8, standing) === standing)
+    // unparseable stamp (overflows Int): treated as legacy
+    write("""{"registry":261,"env":{"cpus":99999999999},"spread":{}}""")
+    assert(Bench.spreadDefaultPath(8, standing) === standing)
+    // unreadable standing path (a directory): treated as legacy
+    java.nio.file.Files.delete(java.nio.file.Paths.get(standing))
+    java.nio.file.Files.createDirectory(java.nio.file.Paths.get(standing))
     assert(Bench.spreadDefaultPath(8, standing) === standing)
   }
 }

@@ -387,4 +387,19 @@ class PlanSpec extends SparkSpec {
       s"synthetic tier must broadcast the bounded catalog, never shuffle it:\n$p")
     assert(!p.contains("CartesianProduct"), p)
   }
+
+  test("every full-graph query serves from the standing store, never lineitem") {
+    // The co-purchase edge list is built once per (session, dataset) in
+    // GraphStateStore; a lineitem scan in a graph query's plan means it
+    // re-derives the |E|-row self-join per query instead of reading the
+    // maintained layout.
+    for (q <- Seq("q_item_rank", "q_triangles", "q_bfs_hops",
+        "q_label_prop", "q_kcore", "q_kcore_fixpoint", "q_tie_strength",
+        "q_degree_dist")) {
+      val p = plan(q)
+      assert(!p.linesIterator.exists(l =>
+          l.contains("FileScan") && l.contains("lineitem.parquet")),
+        s"$q scans lineitem instead of the standing store:\n$p")
+    }
+  }
 }
